@@ -26,18 +26,13 @@ object Bench {
     // ~91 s at 32, local[32]). Scale the knob with the input when
     // benching beyond sf0.1.
     val sp = sys.env.getOrElse("SPARK_GRAFT_SP", "8")
-    val countJobs = sys.env.get("SPARK_GRAFT_JOBCOUNT").contains("true")
-    val builder = SparkSession.builder()
+    val jobCountMode = sys.env.get("SPARK_GRAFT_JOBCOUNT").contains("true")
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", sp)
       .config("spark.sql.adaptive.enabled", aqe)
       .config("spark.ui.enabled", "false")
-    // job-count mode reads statusTracker, whose store evicts past
-    // spark.ui.retainedJobs (default 1000) — the suite can exceed that
-    // (measured 559 jobs with AQE on), which would silently zero the
-    // per-query deltas for late queries
-    if (countJobs) builder.config("spark.ui.retainedJobs", "1000000")
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // durable-iteration cost runs (SCALE.md "durable-mode cost" table):
     // route every iterative truncation through reliable checkpoints so
@@ -106,20 +101,7 @@ object Bench {
     // undiagnosable from the artifact alone (round 8: "failed":8 with no
     // way to tell WHICH eight without a local re-run)
     val failedNames = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Profiling mode: per-query Spark JOB counts (the driver-host cost model
-    // is scheduling rounds, not row work — see AQE comment above). The
-    // status store is fed asynchronously: drain the listener bus before
-    // each sample (the JobCount/PlanSpec technique) instead of a fixed
-    // sleep — under load the bus can still be posting >300 ms after a
-    // query finishes, misattributing its tail jobs to the NEXT query's
-    // delta (drainListenerBus's own doc calls the fixed sleep out).
-    // Gated off in timed runs.
-    def jobsSoFar(): Int = {
-      if (countJobs) org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    }
-    val results = selected.map { q =>
-      val j0 = if (countJobs) jobsSoFar() else 0
+    def timed(q: QueryDef): Double = {
       val t0 = System.nanoTime()
       try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -127,9 +109,20 @@ object Bench {
         failedNames += q.name
         System.err.println(s"[bench] FAIL ${q.name}: ${e.getMessage}")
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (countJobs)
-        System.err.println(s"[bench] jobs ${q.name}: ${jobsSoFar() - j0}")
+      (System.nanoTime() - t0) / 1e9
+    }
+    val results = selected.map { q =>
+      // Profiling mode: per-query Spark JOB counts (the driver-host cost
+      // model is scheduling rounds, not row work — see AQE comment above),
+      // from GraftBridge's listener counter, which also sees streaming
+      // micro-batch jobs. Gated off in timed runs.
+      val dt =
+        if (!jobCountMode) timed(q)
+        else {
+          val (secs, jobs) = org.apache.spark.sql.GraftBridge.countJobs(spark)(timed(q))
+          System.err.println(s"[bench] jobs ${q.name}: $jobs")
+          secs
+        }
       // queries that persist intermediates (shingle tables, CC edges) would
       // otherwise accumulate cache across all queries — GC pressure that
       // shows up as run-to-run variance, not as any query's real cost

@@ -121,6 +121,5 @@ object NormalizeOps {
   def nfc(c: Column): Column = mk(c, NormalizeKernel.NFC)
   def nfd(c: Column): Column = mk(c, NormalizeKernel.NFD)
   def nfkc(c: Column): Column = mk(c, NormalizeKernel.NFKC)
-  def nfkd(c: Column): Column = mk(c, NormalizeKernel.NFKD)
   def stripAccents(c: Column): Column = mk(c, NormalizeKernel.STRIP_ACCENTS)
 }

@@ -666,10 +666,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact dedup (first-wins deterministic) — see also Aggregates.dedupFirst. */
-  def exactDedup(docs: DataFrame, textCol: String, orderCol: String): DataFrame =
-    Aggregates.dedupFirst(docs, Seq(textCol), Seq(col(orderCol).asc))
-
   /** Production SimHash: all 64 bits of `xxhash64(token)` directly — no
     * digest-to-hex parsing and no 60-bit portable-oracle ceiling — with
     * 4×16-bit pigeonhole chunks (4·65,536 buckets; exact for hamming ≤ 3).

@@ -22,8 +22,6 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = graft.functions.VectorOps.dotProduct(a, b)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** One-pass cosine similarity (identical arithmetic to dot/(|a||b|)). */
   def cosine(a: Column, b: Column): Column = graft.functions.VectorOps.cosineSim(a, b)
 

@@ -858,26 +858,11 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "y", "es")
   )
 
-  /** Fraction of tokens that are members of `words` (0.0 when no tokens). */
-  def stopwordRatio(text: Column, words: Seq[String]): Column = {
-    val toks = tokens(text)
-    val hits = size(filter(toks, t => t.isin(words.map(lit(_): Any): _*)))
-    when(size(toks) > 0, hits.cast("double") / size(toks).cast("double")).otherwise(lit(0.0))
-  }
-
   /** Language-ID heuristic: argmax of per-language stopword hit counts, with a
-    * fixed preference order (en > de > fr > es > unknown) on ties.
-    *
-    * Column form — convenient but re-evaluates the tokenizer per hit-count
-    * reference; prefer [[languageGuessed]] on hot paths.
-    */
-  def languageGuess(text: Column): Column =
-    guessFromHits(h => size(filter(tokens(text), t => t.isin(stopwords(h).map(lit(_): Any): _*))))
-
-  /** DataFrame form: tokenizes once (or reuses `toksCol` if the caller
-    * already materialized tokens), materializes the four hit counts as
-    * attributes, then applies the argmax — each stage is a projection, so
-    * nothing is recomputed.
+    * fixed preference order (en > de > fr > es > unknown) on ties. Tokenizes
+    * once (or reuses `toksCol` if the caller already materialized tokens),
+    * materializes the four hit counts as attributes, then applies the
+    * argmax — each stage is a projection, so nothing is recomputed.
     */
   def languageGuessed(df: DataFrame, textCol: String, outCol: String = "guess",
                       toksCol: Option[String] = None): DataFrame = {

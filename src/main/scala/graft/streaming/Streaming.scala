@@ -607,17 +607,13 @@ object Streaming {
         // policy bounds the batch; LSH pairs are a sliver of it), so the
         // adaptive entry's strategy-count job + eager checkpoint job are
         // pure per-trigger scheduling tax. The bounded form is a LAZY
-        // single-task union-find that rides its first consumer's job;
-        // persist (not checkpoint) keeps lineage intact — transient
-        // per-trigger state, recomputed (not failed) on cache eviction,
-        // and nothing durable to leak over an unbounded stream lifetime.
-        // no persist of its own (r20, VERDICT r19 item 7):
-        // dedupClustersBounded's union-find output is already persisted
-        // inside Dedup, and everything on top is a cheap filter+projection
-        // its two consumers (shielded's anti-join, dupIds' union) re-derive
-        // from those cached blocks — the r20 trigger A/B measured the extra
-        // cache layer at zero (16 jobs both ways, isolated wall inside the
-        // noise band), so it paid per-trigger cache bookkeeping for nothing
+        // single-task union-find that rides its consumer's job. It persists
+        // nothing, and neither does this caller (r20, VERDICT r19 item 7):
+        // its two consumers (shielded's anti-join, dupIds' union) each
+        // re-derive the pairs and the union-find from the persisted `state`
+        // blocks above — a batch-bounded self-join over cached rows. The
+        // r20 trigger A/B measured a persist here as cost-free to drop (16
+        // jobs both ways, isolated wall inside the noise band)
         val inBatchDrops = Dedup.dedupClustersBounded(inPairs, "doc_a", "doc_b")
           .where(col("doc_id") =!= col("cluster_rep"))
           .select(col("doc_id").as(idCol))

@@ -119,13 +119,39 @@ object GraftBridge {
   }
 
   /** Deterministically drain the async listener bus: returns only once
-    * every event posted so far has been delivered to every listener.
-    * Job-count pins (PlanSpec, the JobCount tool) sample counters fed by
-    * `SparkListener.onJobStart`; a fixed `Thread.sleep` leaves a loaded
-    * bus still posting after the sample, skewing before/after counts in
-    * either direction. `listenerBus` is `private[spark]` — hence this
-    * bridge.
+    * every event posted so far has been delivered to every listener. A
+    * fixed `Thread.sleep` leaves a loaded bus still posting after a
+    * sample, skewing before/after readings in either direction.
+    * `listenerBus` is `private[spark]` — hence this bridge.
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Runs `body` and returns its result with the number of Spark jobs
+    * started while it ran — the one job counter behind Bench's job-count
+    * mode and every job-count pin in the tests. It counts job-start events
+    * on a listener, so jobs under ANY job group are seen, Structured
+    * Streaming's micro-batch jobs included; the status store's null-group
+    * query misses those, and it evicts jobs past the UI's retained-jobs
+    * limit (1000 by default), so its before/after deltas undercount (even
+    * go negative) late in a long session. The bus is drained before the
+    * listener is added, so a previous action's in-flight events stay out
+    * of the window, and again after `body`, so its own tail events land
+    * inside it. Jobs other threads start meanwhile count too. The listener
+    * is removed even when `body` throws.
+    */
+  def countJobs[A](spark: SparkSession)(body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(start: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val result = body
+      drainListenerBus(spark)
+      (result, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
 }

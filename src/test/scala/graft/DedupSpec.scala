@@ -406,11 +406,7 @@ class DedupSpec extends SparkSpec {
       // leaves shingle/signature tables cached, and CacheManager would
       // serve the measured run's identical plans from those blocks
       spark.catalog.clearCache()
-      val st = spark.sparkContext.statusTracker
-      val before = st.getJobIdsForGroup(null).length
-      f
-      Thread.sleep(500) // status store updates asynchronously
-      st.getJobIdsForGroup(null).length - before
+      org.apache.spark.sql.GraftBridge.countJobs(spark)(f)._2
     }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -433,6 +429,8 @@ class DedupSpec extends SparkSpec {
       val nMd5 = jobsOf(noop(
         Dedup.minhashNearDupPairs(corpus, "doc_id", "text", 3, 8, 2, 0.1)))
       assert(nMd5 <= 3, s"minhashNearDupPairs (md5) ran $nMd5 jobs (bound 3)")
+      info(s"listener-counted jobs: minhashFast $nMinhash, simhashFast $nSimhash, " +
+        s"dedupClusters $nClusters, minhash md5 $nMd5")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 
@@ -448,18 +446,14 @@ class DedupSpec extends SparkSpec {
     // the loop) still fails even though exact jobs-per-round is a Spark
     // implementation detail (measured 3/round here: changed-count +
     // checkpoint materializations).
-    def jobs(): Int = {
-      Thread.sleep(500) // status store updates asynchronously
-      spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    }
     def runAndCountRounds(edges: org.apache.spark.sql.DataFrame): (Array[(Long, Long)], Int, Int) = {
       val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val j0 = jobs()
-        val out = Dedup.dedupClusters(edges, "a", "b", maxRounds = 30, smallGraphEdges = 0)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        (out, Dedup.lastPropagationRounds, jobs() - j0)
+        val (out, jobs) = org.apache.spark.sql.GraftBridge.countJobs(spark)(
+          Dedup.dedupClusters(edges, "a", "b", maxRounds = 30, smallGraphEdges = 0)
+            .collect().map(r => (r.getLong(0), r.getLong(1))))
+        (out, Dedup.lastPropagationRounds, jobs)
       } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
     // worst diameter per edge: a 64-node path (diameter 63). A plain
@@ -467,6 +461,7 @@ class DedupSpec extends SparkSpec {
     // ceil(log2 63) = 6 (+ the final no-change detection round + 1 slack).
     val path = spark.range(0, 63).select(col("id").as("a"), (col("id") + 1).as("b"))
     val (pathOut, pathRounds, pathJobs) = runAndCountRounds(path)
+    info(s"path-64 listener-counted jobs: $pathJobs over $pathRounds rounds")
     assert(pathOut.length == 64 && pathOut.forall(_._2 == 0L),
       "every path node must label to the component min")
     assert(pathRounds <= 8, s"path-64 took $pathRounds rounds (log2(63)=6, bound 8)")

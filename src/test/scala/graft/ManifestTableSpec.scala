@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggregates, InMemoryObjectStore, ManifestTable}
 
@@ -353,12 +354,8 @@ class ManifestTableSpec extends SparkSpec {
     byName("op_merge_acid")(spark, sf0001)
       .write.format("noop").mode("overwrite").save() // warm codec/codegen paths
     spark.catalog.clearCache()
-    val st = spark.sparkContext.statusTracker
-    val before = st.getJobIdsForGroup(null).length
-    byName("op_merge_acid")(spark, sf0001)
-      .write.format("noop").mode("overwrite").save()
-    Thread.sleep(500) // status store updates asynchronously
-    val n = st.getJobIdsForGroup(null).length - before
+    val (_, n) = GraftBridge.countJobs(spark)(byName("op_merge_acid")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
     assert(n <= 9, s"op_merge_acid ran $n jobs (bound 9): overwrite write + merge " +
       "(broadcast + rewrite write) + snapshot read with sort-sample + noop")
     // the conditional-PUT variant must cost the SAME cycle: the log store
@@ -366,12 +363,10 @@ class ManifestTableSpec extends SparkSpec {
     byName("op_merge_acid_os")(spark, sf0001)
       .write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
-    val before2 = st.getJobIdsForGroup(null).length
-    byName("op_merge_acid_os")(spark, sf0001)
-      .write.format("noop").mode("overwrite").save()
-    Thread.sleep(500)
-    val n2 = st.getJobIdsForGroup(null).length - before2
+    val (_, n2) = GraftBridge.countJobs(spark)(byName("op_merge_acid_os")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
     assert(n2 <= 9, s"op_merge_acid_os ran $n2 jobs (bound 9, same cycle as op_merge_acid)")
+    info(s"listener-counted jobs: op_merge_acid $n, op_merge_acid_os $n2")
   }
 
   test("op_exactly_once job count stays bounded; both replays cost ZERO jobs") {
@@ -383,12 +378,9 @@ class ManifestTableSpec extends SparkSpec {
     byName("op_exactly_once")(spark, sf0001)
       .write.format("noop").mode("overwrite").save() // warm codec/codegen
     spark.catalog.clearCache()
-    val st = spark.sparkContext.statusTracker
-    val before = st.getJobIdsForGroup(null).length
-    byName("op_exactly_once")(spark, sf0001)
-      .write.format("noop").mode("overwrite").save()
-    Thread.sleep(500)
-    val n = st.getJobIdsForGroup(null).length - before
+    val (_, n) = GraftBridge.countJobs(spark)(byName("op_exactly_once")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save())
+    info(s"op_exactly_once listener-counted jobs: $n")
     assert(n <= 14, s"op_exactly_once ran $n jobs (bound 14): 2 append writes + " +
       "2 merge cycles + snapshot sort-sample + noop — replays must add zero")
     // and the replay claim directly: appendOnce/mergeOnce of an applied
@@ -397,12 +389,12 @@ class ManifestTableSpec extends SparkSpec {
     val t = ManifestTable(spark, root)
     t.appendOnce(kv(1L -> 1.0), "s", 0L)
     t.mergeOnce(kv(1L -> 2.0), Seq("k"), "m", 0L)
-    val before2 = st.getJobIdsForGroup(null).length
-    t.appendOnce(kv(1L -> 1.0), "s", 0L)
-    t.mergeOnce(kv(1L -> 2.0), Seq("k"), "m", 0L)
-    Thread.sleep(500)
-    assert(st.getJobIdsForGroup(null).length == before2,
-      "a recognized replay must submit ZERO Spark jobs")
+    val (_, replayJobs) = GraftBridge.countJobs(spark) {
+      t.appendOnce(kv(1L -> 1.0), "s", 0L)
+      t.mergeOnce(kv(1L -> 2.0), Seq("k"), "m", 0L)
+    }
+    assert(replayJobs == 0,
+      s"a recognized replay must submit ZERO Spark jobs (ran $replayJobs)")
   }
 
   test("vacuum drops data outside the retained window; latest stays readable") {

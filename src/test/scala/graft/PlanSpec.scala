@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.GraftBridge
+
 /** Plan-shape assertions: the 100-TB posture is only real if filters and
   * projections reach the parquet scan and joins pick the intended strategy.
   * These tests pin the plans so a regression (e.g. an accidental UDF or a
@@ -473,17 +475,9 @@ class PlanSpec extends SparkSpec {
         fn(spark, sf0001).write.format("noop").mode("overwrite").save()
       noop() // warm codegen/parquet-footer paths
       spark.catalog.clearCache()
-      val st = spark.sparkContext.statusTracker
-      // drain BEFORE the before-sample too: the warm run's in-flight
-      // job-start events would otherwise land inside the measured window
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val before = st.getJobIdsForGroup(null).length
-      noop()
-      // the status store is fed by the listener bus — drain it instead of
-      // sleeping a fixed interval (under load events can post after the
-      // sample, skewing the count in either direction)
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      st.getJobIdsForGroup(null).length - before
+      val (_, n) = GraftBridge.countJobs(spark)(noop())
+      info(s"$name listener-counted jobs: $n")
+      n
     }
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -770,41 +764,25 @@ class PlanSpec extends SparkSpec {
     // driver jobs are Spark's own reliable-checkpoint writes (one per
     // materialized truncation — the persist-before-checkpoint caveat,
     // documented in ops/Lineage.scala), and the rows are identical.
-    // LISTENER-counted (the op_stream_neardup pin's technique), not
-    // statusTracker: the status store evicts past spark.ui.retainedJobs
-    // (1000), so by this point in the suite before/after deltas there can
-    // go NEGATIVE as old entries age out
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(start: SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    }
     def run(name: String): (Long, Array[String], Int) = {
       val fn = Queries.all.find(_.name == name).get.fn
       def rows() = fn(spark, sf0001).collect().map(_.toString).sorted
       rows() // warm
       spark.catalog.clearCache()
-      // drain before AND after the measured run (the warm run's events
-      // must not leak into the window)
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val before = jobCounter.get()
-      val r = rows()
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val jobs = jobCounter.get() - before
+      val (r, jobs) = GraftBridge.countJobs(spark)(rows())
       spark.catalog.clearCache()
       (r.length.toLong, r, jobs)
     }
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val dir = java.nio.file.Files.createTempDirectory("graft-durable-pin")
-    spark.sparkContext.addSparkListener(listener)
     try {
       for (name <- Seq("op_bfs", "op_pagerank", "op_hierarchy_flatten")) {
         spark.conf.unset(graft.ops.Lineage.CheckpointDirKey)
         val (_, defRows, defJobs) = run(name)
         spark.conf.set(graft.ops.Lineage.CheckpointDirKey, dir.toString)
         val (_, durRows, durJobs) = run(name)
+        info(s"$name listener-counted jobs: $defJobs default, $durJobs durable")
         assert(durRows.sameElements(defRows),
           s"$name: durable mode changed the RESULT — lineage seam is not transparent")
         // each graftCheckpoint materialization may add exactly one
@@ -824,53 +802,63 @@ class PlanSpec extends SparkSpec {
             "more than the per-truncation checkpoint writes")
       }
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset(graft.ops.Lineage.CheckpointDirKey)
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
   }
 
   test("op_stream_neardup driver-job bound (listener-counted): per-trigger fixed cost pinned") {
-    // Streaming jobs run under the micro-batch execution's job group, so
-    // statusTracker's null-group query (jobsOf above) cannot see them —
-    // count via a listener on job start instead. Measured 16 under the
-    // bench posture after the r19 trigger-cost cuts (was 29 → r16 cut →
-    // 22 → this): the in-batch shield's strategy-count job and eager
-    // union-find checkpoint job are gone (dedupClustersBounded rides its
-    // consumers' jobs via persist), and the newState persist-count job is
-    // folded into the state-append write itself (appendNonEmpty's
-    // observed-metric gate). Per steady-state trigger what remains is the
-    // state-append write, the exactly-once corpus append, and the
-    // broadcast builds the anti-joins need. Bound 18 = measured + 2
-    // (take / broadcast flutter at other partition layouts). The replayed
-    // batch-0 token must stay driver-side (0 jobs) — a data write
-    // appearing there pushes the count over this bound.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(start: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
+    // Streaming jobs run under the micro-batch execution's job group, which
+    // the status store's null-group query cannot see; countJobs' listener
+    // sees every group. Measured 16 under the bench posture after the r19
+    // trigger-cost cuts (was 29 → r16 cut → 22 → this): the in-batch
+    // shield's strategy-count job and eager union-find checkpoint job are
+    // gone (dedupClustersBounded is a lazy plan that rides its consumers'
+    // jobs), and the newState persist-count job is folded into the
+    // state-append write itself (appendNonEmpty's observed-metric gate).
+    // Per steady-state trigger what remains is the state-append write, the
+    // exactly-once corpus append, and the broadcast builds the anti-joins
+    // need. Bound 18 = measured + 2 (take / broadcast flutter at other
+    // partition layouts). The replayed batch-0 token must stay driver-side
+    // (0 jobs) — a data write appearing there pushes the count over this
+    // bound.
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(counter)
     def noop(): Unit = Queries.all.find(_.name == "op_stream_neardup").get
       .fn(spark, sf0001).write.format("noop").mode("overwrite").save()
     try {
       noop() // warm codegen/footer paths
       spark.catalog.clearCache()
-      // drain the async listener bus DETERMINISTICALLY before sampling:
-      // a fixed sleep lets a loaded bus post events after the sample,
-      // skewing before/after in either direction
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val before = jobs.get()
-      noop()
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      val n = jobs.get() - before
+      val (_, n) = GraftBridge.countJobs(spark)(noop())
       info(s"op_stream_neardup listener-counted jobs: $n")
       assert(n <= 18, s"op_stream_neardup ran $n jobs (bound 18)")
-    } finally {
-      spark.sparkContext.removeSparkListener(counter)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
+  test("countJobs counts jobs under any job group and removes its listener when the body throws") {
+    val sc = spark.sparkContext
+    // a job group hides an action from the status store's null-group query
+    // (it reads 0 here) — the way streaming micro-batch jobs are hidden
+    sc.setJobGroup("graft-countjobs-pin", "countJobs job-group pin")
+    try {
+      val (sum, n) = GraftBridge.countJobs(spark)(sc.parallelize(1 to 10, 2).sum())
+      assert(sum == 55.0)
+      assert(n == 1, s"one RDD action under a job group counted as $n jobs")
+    } finally sc.clearJobGroup()
+    // the bus's listener list is private[spark]; read it reflectively
+    def listeners(): Int = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[_]].size
     }
+    val idle = listeners()
+    var inside = -1
+    intercept[IllegalStateException] {
+      GraftBridge.countJobs(spark) {
+        inside = listeners()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(inside == idle + 1, s"countJobs registered ${inside - idle} listeners (expected 1)")
+    assert(listeners() == idle, "countJobs left its listener registered after the body threw")
   }
 }
