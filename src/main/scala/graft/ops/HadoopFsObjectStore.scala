@@ -5,10 +5,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
 
 /** [[ObjectStoreClient]] over a REAL Hadoop filesystem — the SDK-shaped
   * adapter the conditional-PUT protocol deploys on when the "object store"
-  * is HDFS or a mounted/local filesystem (the sandbox proves it on
-  * `file://`; the contract suite certifies it — see
-  * `HadoopFsObjectStoreContract`). The reference runs its ledgered imports
-  * against a single Postgres + local volumes
+  * is HDFS or a mounted/local filesystem, and the client behind every
+  * `ManifestTable(spark, root)` (proven on `file://`; the contract suite
+  * certifies it — see `HadoopFsObjectStoreContract`). The reference runs
+  * its ledgered imports against a single Postgres + local volumes
   * (/root/reference/docker-compose.yaml); this is the same durability seam
   * grown to a store any Hadoop connector can reach.
   *
@@ -24,16 +24,18 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, 
   *    reintroduce the orphan-lock mode this client exists to avoid.
   *  - **other schemes (HDFS-class)**: `FileContext.rename(src, dst,
   *    Rename.NONE)` — a single atomic namenode op that fails
-  *    `FileAlreadyExistsException` when the destination exists. Like
-  *    [[HadoopLogStore]]'s rename step, the rename can APPLY and still
-  *    throw (RPC retry landing server-side after a client error), so an
-  *    ambiguous failure is resolved by probing the destination: our body
-  *    committed = win; a foreign body = loss; otherwise rethrow.
+  *    `FileAlreadyExistsException` when the destination exists. The
+  *    rename can APPLY and still throw (RPC retry landing server-side
+  *    after a client error), so an ambiguous failure is resolved by
+  *    probing the destination: our body committed = win; a foreign body =
+  *    loss; otherwise a transient failure whose cause is the rename's own.
   *
-  * Keys resolve against `root` (`new Path(root, key)`), so ABSOLUTE keys
-  * (as [[ObjectStoreLogStore]] builds when its prefix is an absolute
-  * table root) address the filesystem directly and are listed back in the
-  * same absolute form — the caller's namespace round-trips either way.
+  * Keys resolve against `root` (`new Path(root, key)`): a relative key
+  * lands below the root, while an absolute or scheme-qualified key (as
+  * [[ObjectStoreLogStore]] builds when its prefix is a table root)
+  * addresses the filesystem directly. [[list]] returns keys in the form
+  * of the prefix it was given, so the caller's namespace round-trips
+  * whichever form it uses.
   * Staging lives under `root/.graft-put-stage`; dot-prefixed basenames
   * are reserved (hidden from [[list]]), matching the `_`/`.` marker
   * convention of every Hadoop table layout. On the local scheme the raw
@@ -100,21 +102,21 @@ class HadoopFsObjectStore(root: String, conf: Configuration) extends ObjectStore
         catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
           case e: java.io.IOException =>
-            // the rename can APPLY and still throw (HadoopLogStore's
-            // probe discipline): a committed body settles the outcome —
-            // ours = win, foreign = loss. Still-absent is AMBIGUOUS (an
-            // RPC retry of the rename may land server-side after this
-            // probe), so it surfaces as the contract's transient type:
-            // ObjectStoreLogStore's resolution loop re-issues the same
-            // idempotent conditional PUT until the version settles — a
-            // raw IOException would abort the whole commit on the first
+            // the rename can APPLY and still throw: a committed body
+            // settles the outcome — ours = win, foreign = loss.
+            // Still-absent is AMBIGUOUS (an RPC retry of the rename may
+            // land server-side after this probe), so it surfaces as the
+            // contract's transient type, caused by the rename's own
+            // failure: ObjectStoreLogStore's resolution loop re-issues the
+            // same idempotent conditional PUT until the version settles —
+            // a raw IOException would abort the whole commit on the first
             // hiccup, bypassing that loop.
             get(key) match {
               case Some(committed) => java.util.Arrays.equals(committed, bytes)
               case None =>
                 val t = new ObjectStoreClient.TransientStoreException(
                   s"ambiguous rename publish of $key (still absent after probe): $e")
-                t.addSuppressed(e)
+                t.initCause(e)
                 throw t
             }
         }
@@ -194,31 +196,25 @@ class HadoopFsObjectStore(root: String, conf: Configuration) extends ObjectStore
   override def list(prefix: String): Seq[String] = {
     // a prefix may end mid-name ("a/_log/v00"), so list from its deepest
     // DIRECTORY ancestor and filter keys; one recursive LIST stream, not
-    // a round trip per level
-    val slash = prefix.lastIndexOf('/')
-    val dir = if (slash < 0) rootPath else pathOf(prefix.substring(0, slash + 1))
+    // a round trip per level. Each key is that ancestor's key text plus
+    // the file's components below it — the prefix's own form (relative,
+    // absolute or scheme-qualified), whatever form the filesystem
+    // reports paths in
+    val dirKey = prefix.substring(0, prefix.lastIndexOf('/') + 1)
+    val dir = if (dirKey.isEmpty) rootPath else pathOf(dirKey)
     if (!fs.exists(dir)) return Seq.empty
-    val absolute = prefix.startsWith("/")
+    val base = dir.toUri.getPath
     val it = fs.listFiles(dir, /* recursive = */ true)
     val out = Seq.newBuilder[String]
     while (it.hasNext) {
-      val f = it.next().getPath
-      val comps = componentsBelowRoot(f)
+      val comps = Iterator.iterate(it.next().getPath)(_.getParent)
+        .takeWhile(q => q != null && q.toUri.getPath != base)
+        .map(_.getName).toList.reverse
       if (!comps.exists(_.startsWith("."))) {
-        val key = if (absolute) f.toUri.getPath else comps.mkString("/")
+        val key = dirKey + comps.mkString("/")
         if (key.startsWith(prefix)) out += key
       }
     }
     out.result()
-  }
-
-  /** Path components strictly below the client root (file included),
-    * top-down — the inverse of [[pathOf]] for relative keys.
-    */
-  private def componentsBelowRoot(f: Path): List[String] = {
-    val base = rootPath.toUri.getPath
-    Iterator.iterate(f)(_.getParent)
-      .takeWhile(q => q != null && q.toUri.getPath != base)
-      .map(_.getName).toList.reverse
   }
 }

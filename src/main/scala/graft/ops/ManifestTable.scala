@@ -14,19 +14,16 @@ import org.apache.spark.sql.types._
   * directory have nothing to serialize against). The reference's store is a
   * single-writer Postgres table (create_death_table.sql:1-8,
   * global_dag.py:381-397); this is the multi-writer, snapshot-isolated form
-  * a 100-TB lakehouse needs, built from two filesystem primitives only:
-  *
-  *  - **CAS via exclusive file creation**: committing version N reserves
-  *    `_log/vN.lock` with an atomic create-if-absent (`O_CREAT|O_EXCL` on
-  *    local POSIX, atomic namenode create on HDFS). Exactly one writer per
-  *    version wins; losers re-read the new latest snapshot and retry at
-  *    N+1. Plain rename is NOT the primitive because POSIX `rename(2)`
-  *    silently overwrites an existing destination — two "successful"
-  *    renames to the same manifest would lose a commit.
-  *  - **Atomic visibility via tmp + rename**: the lock holder writes the
-  *    manifest body to `_log/.tmp-<uuid>` and renames it to `vN.txt`.
-  *    Readers list only `v*.txt`, so they see either nothing or the whole
-  *    manifest, never a partial file.
+  * a 100-TB lakehouse needs, built on ONE primitive: a conditional PUT
+  * (create-if-absent, atomically visible) of the manifest itself.
+  * Committing version N publishes `_log/vN.txt` through
+  * [[ObjectStoreLogStore]]; exactly one writer per version wins, and
+  * losers re-read the new latest snapshot and retry at N+1. Readers see
+  * either nothing or the whole manifest, never a partial file. On a
+  * Hadoop filesystem the PUT is a staged body published by a hard link
+  * (local) or a no-overwrite rename (HDFS-class) — see
+  * [[HadoopFsObjectStore]]; plain rename is NOT the primitive because
+  * POSIX `rename(2)` silently overwrites an existing destination.
   *
   * Data files are immutable: every commit writes its parquet under a fresh
   * `data/<uuid>/` directory and the manifest names the set of directories
@@ -62,21 +59,16 @@ import org.apache.spark.sql.types._
   *    upsert (schema coercion) all fall back to rewriting.
   *
   * Failure notes (documented trade-offs, mirrored in ManifestTableSpec):
-  *  - A writer whose PROCESS dies between reserving `vN.lock` and
-  *    publishing `vN.txt` leaves an orphan lock; later writers exhaust
-  *    retries and fail loudly naming the lock to remove. (A live writer
-  *    hitting an IO failure releases its own lock on the way out.)
-  *    [[breakOrphanLock]] is the fenced admin unblock: it refuses when the
-  *    version is actually published, and the caller asserts no writer is
-  *    live (a TTL-based AUTOMATIC breaker would need a clock authority
-  *    this build doesn't assume — Delta has the same stance on orphaned
-  *    staging state).
+  *  - A writer whose PROCESS dies mid-commit either published its whole
+  *    manifest or left nothing in `_log` (reserve and publish are one
+  *    request), so no crash can wedge the log; its unreferenced data dir
+  *    is vacuum's to collect.
   *  - `vacuum(retainLast)` deletes data dirs unreferenced by the newest K
   *    manifests; time travel older than that stops working, like Delta's
   *    `VACUUM` past the retention window.
   *  - The `_log` itself is append-only and never pruned: every commit adds
-  *    one manifest (plus one lock file on the Hadoop store). NO read path
-  *    pays for that growth anymore: `latestVersion()` keeps a per-handle
+  *    one manifest. NO read path pays for that growth anymore:
+  *    `latestVersion()` keeps a per-handle
   *    lower bound and probes FORWARD (versions are dense), so a steady-
   *    state commit costs one miss-probe, and every Kth commit writes the
   *    advisory `_ckpt` hint (Delta's `_last_checkpoint` analog — version +
@@ -87,21 +79,23 @@ import org.apache.spark.sql.types._
   *    absent/invalid hints. Storage still accumulates one small object per
   *    commit — pruning published manifests would break time travel, which
   *    is vacuum's documented contract to bound, not the log's.
-  *  - On an object store, build with [[ManifestTable.onObjectStore]]: the
-  *    CAS primitive becomes ONE conditional PUT of the manifest itself
-  *    ([[ObjectStoreLogStore]]), the orphan-lock mode disappears, and the
-  *    rest of the protocol is unchanged. Stores without any conditional
-  *    write (S3 pre-2024) need a coordinator; same caveat as every
-  *    log-structured format.
+  *  - On an S3-class object store, build with
+  *    [[ManifestTable.onObjectStore]] and the store's own client: the same
+  *    log, with the store's native precondition as the PUT. Stores without
+  *    any conditional write (S3 pre-2024) need a coordinator; same caveat
+  *    as every log-structured format.
   */
 final class ManifestTable private (
     spark: SparkSession, rootStr: String, statsCols: Seq[String],
-    log: ManifestLogStore, checkpointInterval: Int) {
+    log: ObjectStoreLogStore, checkpointInterval: Int) {
   import ManifestTable._
 
   private val root = new Path(rootStr)
   private def fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def dataDir = new Path(root, "data")
+
+  /** The prefix every error message of this table starts with. */
+  override def toString: String = s"ManifestTable $rootStr"
 
   // ---------------------------------------------------------------- reads
 
@@ -827,8 +821,7 @@ final class ManifestTable private (
     val prev = prevV.map(readManifest)
     val next = prevV.getOrElse(-1L) + 1
     // everything that can fail for non-race reasons (schema validation in
-    // the callback, manifest assembly) happens BEFORE the lock is taken —
-    // a throw while holding the lock would wedge the whole table
+    // the callback, manifest assembly) happens BEFORE the publish
     val allDirs = dirs(prev)
     val inherited = prev.map(_.stats).getOrElse(Map.empty)
     val statsByDir: Map[String, Map[String, ColStat]] =
@@ -859,9 +852,7 @@ final class ManifestTable private (
     }
     val bodyBytes = body.toString.getBytes(UTF_8)
     if (!log.publishIfAbsent(next, bodyBytes)) {
-      // lost the race (or, on the Hadoop store, a reserved-but-never-
-      // published lock is in the way); the retry loop re-lands here
-      // until retries exhaust
+      // lost the race; the retry loop re-lands here until retries exhaust
       return None
     }
     // warm the cache with the EXACT published bytes: the committer's own
@@ -877,10 +868,9 @@ final class ManifestTable private (
     Some(next)
   }
 
-  /** Writes the advisory checkpoint (version + its manifest body). A store
-    * without an overwrite primitive disables checkpointing silently; any
-    * other failure only costs future cold starts their LIST, so it logs
-    * and moves on — the commit it rides on has already succeeded.
+  /** Writes the advisory checkpoint (version + its manifest body). A
+    * failure only costs future cold starts their LIST, so it logs and
+    * moves on — the commit it rides on has already succeeded.
     */
   private def writeCheckpointHint(v: Long, manifestBody: Array[Byte]): Unit =
     try {
@@ -891,22 +881,20 @@ final class ManifestTable private (
         .toString.getBytes(UTF_8)
       log.writeCheckpoint(body)
     } catch {
-      case _: UnsupportedOperationException => () // store has no checkpoint support
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"ManifestTable $rootStr: best-effort checkpoint at v$v " +
           s"failed (cold starts keep LISTing until the next one lands): ${e.getMessage}")
     }
 
-  private def failRetries(maxRetries: Int): Nothing = {
-    val orphan = latestVersion().getOrElse(-1L) + 1
+  private def failRetries(maxRetries: Int): Nothing =
     throw new java.io.IOException(
-      s"ManifestTable $rootStr: commit failed after $maxRetries retries; " +
-      log.contentionHint(orphan))
-  }
+      s"ManifestTable $rootStr: commit failed after $maxRetries retries; persistent " +
+        "contention means live writers keep winning each version; raise maxRetries " +
+        "or shard writers")
 
   /** Published manifests are IMMUTABLE (the whole commit protocol rests on
-    * it: a version is one conditional PUT / exclusive create, never
-    * rewritten), so parsed manifests cache safely per table handle. This
+    * it: a version is one conditional PUT, never rewritten), so parsed
+    * manifests cache safely per table handle. This
     * matters on the object-store path, where one mergeOnce attempt would
     * otherwise GET the same latest manifest three times (token check,
     * merge-input read, commitOnce's own read) per CAS attempt — each a
@@ -939,19 +927,6 @@ final class ManifestTable private (
     }
     parseManifest(v, bytes)
   }
-
-  /** ADMIN-ONLY unblock for the Hadoop store's documented orphan-lock
-    * failure mode: a writer PROCESS that died between reserving `vN.lock`
-    * and publishing `vN.txt` wedges all later writers (they exhaust
-    * retries naming the lock). This removes the orphan with a fencing
-    * check — it REFUSES when version `version`'s manifest is published
-    * (the writer actually committed; the diagnosis is wrong). The caller
-    * asserts no writer is live: breaking a LIVE writer's reservation
-    * mid-publish can lose its commit (POSIX rename overwrites). The
-    * conditional-PUT store has no locks and throws
-    * `UnsupportedOperationException`.
-    */
-  def breakOrphanLock(version: Long): Unit = log.breakLock(version)
 
   private def parseManifest(v: Long, bytes: Array[Byte]): Manifest = {
     val text = new String(bytes, UTF_8)
@@ -1029,19 +1004,23 @@ object ManifestTable {
     */
   def apply(spark: SparkSession, root: String, statsCols: Seq[String] = Nil,
             checkpointInterval: Int = DefaultCheckpointInterval): ManifestTable = {
+    // qualified ONCE: the client resolves keys against its root and lists
+    // them back in the prefix's form, so one scheme-qualified absolute
+    // string for both keeps a relative or `file://` root from nesting the
+    // log below itself or listing it back empty
+    val conf = spark.sparkContext.hadoopConfiguration
     val rootPath = new Path(root)
+    val qualified = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
     new ManifestTable(spark, root, statsCols,
-      new HadoopLogStore(
-        rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new Path(rootPath, "_log")), checkpointInterval)
+      new ObjectStoreLogStore(new HadoopFsObjectStore(qualified, conf), qualified),
+      checkpointInterval)
   }
 
-  /** The table with its commit log on an S3-class object store via the
-    * conditional-PUT primitive ([[ObjectStoreClient.putIfNoneMatch]]):
-    * version N's commit is ONE atomic request, the orphan-lock failure
-    * mode does not exist, and the retry/backoff/parent-guard protocol is
-    * byte-identical to the filesystem table's (see
-    * [[ObjectStoreLogStore]] and SCALE.md's conditional-PUT contract).
+  /** The table with its commit log on a caller-supplied object-store client
+    * (an S3/GCS/Azure SDK adapter, or [[InMemoryObjectStore]]): the same
+    * conditional-PUT log as [[apply]], with `root` used verbatim as the
+    * key prefix (see [[ObjectStoreLogStore]] and SCALE.md's
+    * conditional-PUT contract).
     * DATA files still read/write through `root`'s Hadoop filesystem —
     * on a real deployment that is the same store via its Hadoop
     * connector (s3a/gs/abfs), whose data-path semantics (immutable dirs

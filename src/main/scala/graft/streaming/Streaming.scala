@@ -565,6 +565,21 @@ object Streaming {
       val sig = Dedup.minhashSignatures(sh, idCol, numHashes)
       val sigArr = sig.select(col(idCol),
         array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
+      // a store written when signatures were hex strings (sig
+      // array<string>) cannot be probed with array<int> signatures — each
+      // slot comparison would coerce one side — so reject it by its
+      // manifest schema before any plan over it is built or any commit
+      val histOpt = sigTable.latestVersion().map(_ => sigTable.snapshot())
+      histOpt.foreach { hist =>
+        val want = sigArr.schema("sig").dataType
+        val got = hist.schema.find(_.name == "sig").map(_.dataType)
+        if (!got.contains(want))
+          throw new IllegalStateException(
+            s"$sigTable: fingerprint store holds sig as " +
+              s"${got.fold("(absent)")(_.simpleString)}, this sink writes " +
+              s"${want.simpleString}; rebuild the store (delete the table root and " +
+              "re-ingest) before restarting the stream")
+      }
       // batch-bounded and consumed by three sinks (dup probe, state
       // append, acceptance) — persist so the sign/join pipeline runs once
       val state = Dedup.lshBuckets(sig, idCol, numHashes, rowsPerBand)
@@ -619,7 +634,6 @@ object Streaming {
           .select(col("doc_id").as(idCol))
         val shielded = state.join(inBatchDrops, Seq(idCol), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val histOpt = sigTable.latestVersion().map(_ => sigTable.snapshot())
         // persisted like `state`: histDups is batch-bounded but its lineage
         // is the corpus-sized history bucket join, which would otherwise
         // re-execute for each of the three consumers below

@@ -6,9 +6,10 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggregates, InMemoryObjectStore, ManifestTable}
 
-/** Commit-protocol contract of [[graft.ops.ManifestTable]]: atomic CAS
-  * commits, snapshot isolation, time travel, serializable concurrent
-  * appends/merges, orphan-lock failure mode, vacuum retention.
+/** Commit-protocol contract of [[graft.ops.ManifestTable]]: atomic
+  * conditional-PUT commits, snapshot isolation, time travel, serializable
+  * concurrent appends/merges, table roots in every path form, tables
+  * written by the earlier lock-file protocol, vacuum retention.
   */
 class ManifestTableSpec extends SparkSpec {
   import spark.implicits._
@@ -202,44 +203,6 @@ class ManifestTableSpec extends SparkSpec {
     t4.append(Seq((2L, "y")).toDF("k", "_change"))
     val e2 = intercept[IllegalArgumentException] { t4.diff(0, 1) }
     assert(e2.getMessage.contains("_change"))
-  }
-
-  test("orphan lock (crashed writer) fails loudly naming the lock to remove") {
-    val root = freshRoot()
-    val t = ManifestTable(spark, root)
-    t.overwrite(kv(1L -> 1.0))
-    // simulate a writer that reserved v1 and died before publishing
-    val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
-    assert(lock.createNewFile())
-    val e = intercept[java.io.IOException] { t.append(kv(2L -> 2.0), maxRetries = 1) }
-    assert(e.getMessage.contains("v00000000000000000001.lock"))
-    // removing the orphan unblocks the log exactly where it stopped
-    assert(lock.delete())
-    assert(t.append(kv(2L -> 2.0)) == 1L)
-    assert(t.snapshot().count() == 2)
-  }
-
-  test("commit retries THROUGH a transiently held lock and lands once it frees (no manual re-invocation)") {
-    // the conditional-PUT retry path as such: a contender holds the CAS
-    // slot (on an object store: its conditional PUT of vN.lock won), the
-    // writer's attempts keep losing, and when the slot frees the SAME
-    // append call lands on its own — distinct from the orphan-lock test,
-    // which exhausts retries and requires operator intervention
-    val root = freshRoot()
-    val t = ManifestTable(spark, root)
-    t.overwrite(kv(1L -> 1.0))
-    val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
-    assert(lock.createNewFile())
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    val pending = Future(t.append(kv(2L -> 2.0), maxRetries = 50))
-    Thread.sleep(800) // the writer must now be inside its backoff loop
-    assert(!pending.isCompleted, "append must wait out the held lock, not fail")
-    assert(lock.delete())
-    assert(Await.result(pending, 60.seconds) == 1L,
-      "the blocked append must commit v1 itself once the lock frees")
-    assert(t.snapshot().count() == 2)
   }
 
   test("stats-pruned merge rewrites only range-overlapping dirs") {
@@ -473,6 +436,8 @@ class ManifestTableSpec extends SparkSpec {
       override def putIfNoneMatch(key: String, bytes: Array[Byte]): Boolean =
         inner.putIfNoneMatch(key, bytes)
       override def get(key: String): Option[Array[Byte]] = inner.get(key)
+      override def head(key: String): Boolean = inner.head(key)
+      override def put(key: String, bytes: Array[Byte]): Unit = inner.put(key, bytes)
       override def list(prefix: String): Seq[String] = {
         lists.incrementAndGet(); inner.list(prefix)
       }
@@ -598,128 +563,6 @@ class ManifestTableSpec extends SparkSpec {
     // the primitive-level halves (in-call GET retry resolves the self-win;
     // a persistently dead GET throws rather than resolving to "lost")
     // are certified client-agnostically in ObjectStoreContractSuite
-  }
-
-  test("hadoop log: losing the lock race is contention; an IO failure creating the lock surfaces as itself") {
-    // non-"file" schemes reserve via fs.create(lock, overwrite=false).
-    // ONLY FileAlreadyExists means "lost the race" (retry); a
-    // permissions/quota failure must propagate, not spin as phantom
-    // contention ending in a misleading orphan-lock hint.
-    import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath}
-    val dir = Files.createTempDirectory("graft-fakedfs").toString
-    class FakeDfs(lockFault: HPath => Option[java.io.IOException])
-        extends org.apache.hadoop.fs.RawLocalFileSystem {
-      initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-      override def getScheme: String = "fakedfs" // force the fs.create reserve path
-      override def create(f: HPath, overwrite: Boolean): FSDataOutputStream = {
-        if (f.getName.endsWith(".lock")) lockFault(f).foreach(e => throw e)
-        super.create(f, overwrite)
-      }
-    }
-    // 1) permissions failure: propagates with ITS message
-    val denied = new FakeDfs(_ => Some(new java.io.IOException("Permission denied: fake quota")))
-    val deniedStore = new graft.ops.HadoopLogStore(denied, new HPath(dir, "denied/_log"))
-    val e = intercept[java.io.IOException] {
-      deniedStore.publishIfAbsent(0L, "b".getBytes("UTF-8"))
-    }
-    assert(e.getMessage.contains("Permission denied"), e.getMessage)
-    // 2) lock already exists: FileAlreadyExistsException reads as contention
-    val contended = new FakeDfs(
-      _ => Some(new org.apache.hadoop.fs.FileAlreadyExistsException("lock exists")))
-    val contendedStore = new graft.ops.HadoopLogStore(contended, new HPath(dir, "cont/_log"))
-    assert(!contendedStore.publishIfAbsent(0L, "b".getBytes("UTF-8")),
-      "a lost lock race must report contention, not throw")
-    // 3) healthy non-file scheme: the create-reserve path commits end to end
-    val ok = new FakeDfs(_ => None)
-    val okStore = new graft.ops.HadoopLogStore(ok, new HPath(dir, "ok/_log"))
-    val body = "winner".getBytes("UTF-8")
-    assert(okStore.publishIfAbsent(0L, body))
-    assert(!okStore.publishIfAbsent(0L, "loser".getBytes("UTF-8")),
-      "second reserve of a committed version must lose")
-    assert(okStore.read(0L).exists(java.util.Arrays.equals(_, body)))
-  }
-
-  test("HadoopLogStore: rename that APPLIES then throws must keep the lock and report the commit (overwrite-window regression)") {
-    // ChecksumFileSystem can rename the data file then fail on the .crc
-    // step; an HDFS RPC retry can land server-side after a client error.
-    // The old catch released the lock unconditionally — a racing writer
-    // could then re-reserve the version and rename OVER the committed
-    // manifest (POSIX rename silently overwrites): two bodies for one
-    // committed version.
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dir = Files.createTempDirectory("graft-ambirename").toString
-    class AmbiguousRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-      initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-      override def getScheme: String = "file" // RawLocalFileSystem leaves it unimplemented
-      @volatile var armRenameFault = false
-      override def rename(src: HPath, dst: HPath): Boolean = {
-        val applied = super.rename(src, dst)
-        if (armRenameFault && dst.getName.endsWith(".txt")) {
-          armRenameFault = false
-          throw new java.io.IOException("injected: crc step failed AFTER the rename applied")
-        }
-        applied
-      }
-    }
-    val fs = new AmbiguousRenameFs
-    val store = new graft.ops.HadoopLogStore(fs, new HPath(dir, "_log"))
-    val body = "winner".getBytes("UTF-8")
-    fs.armRenameFault = true
-    assert(store.publishIfAbsent(0L, body),
-      "an applied-then-thrown rename IS a successful commit")
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)))
-    assert(store.listVersions() == Seq(0L))
-    // the lock must still be held: a racing writer can neither re-reserve
-    // nor overwrite the committed body
-    assert(!store.publishIfAbsent(0L, "usurper".getBytes("UTF-8")),
-      "version 0 must stay contended — its lock was never released")
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)),
-      "the committed body must be untouched")
-  }
-
-  test("HadoopLogStore: rename applied AND probe failed keeps the lock (ambiguity wedges, never fails open)") {
-    // the double-failure window: the rename lands server-side but throws
-    // client-side, and the exists() probe hits the same transient blip.
-    // The old boolean probe defaulted that to "not published" and RELEASED
-    // the lock — a racing writer could then re-reserve the version and
-    // rename over the COMMITTED manifest. Unverifiable must wedge: keep
-    // the lock (recoverable orphan), rethrow.
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dir = Files.createTempDirectory("graft-doublefault").toString
-    class DoubleFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-      initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-      override def getScheme: String = "file"
-      @volatile var armed = false
-      override def rename(src: HPath, dst: HPath): Boolean = {
-        val applied = super.rename(src, dst)
-        if (armed && dst.getName.endsWith(".txt"))
-          throw new java.io.IOException("injected: rename response lost")
-        applied
-      }
-      override def exists(p: HPath): Boolean = {
-        if (armed && p.getName.endsWith(".txt")) {
-          armed = false
-          throw new java.io.IOException("injected: probe hit the same blip")
-        }
-        super.exists(p)
-      }
-    }
-    val fs = new DoubleFaultFs
-    val store = new graft.ops.HadoopLogStore(fs, new HPath(dir, "_log"))
-    val body = "winner".getBytes("UTF-8")
-    fs.armed = true
-    val e = intercept[java.io.IOException] { store.publishIfAbsent(0L, body) }
-    assert(e.getMessage.contains("rename response lost"), e.getMessage)
-    assert(e.getSuppressed.exists(_.getMessage.contains("probe hit the same blip")),
-      "the probe failure must ride as a suppressed exception")
-    // the commit actually landed; the lock must still be held so nobody
-    // can overwrite it
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)),
-      "the rename had applied — the body is committed")
-    assert(!store.publishIfAbsent(0L, "usurper".getBytes("UTF-8")),
-      "version 0 must stay contended — the lock was never released")
-    assert(store.read(0L).exists(java.util.Arrays.equals(_, body)),
-      "the committed body must be untouched")
   }
 
   test("deleteByKeys: EMPTY tombstones are the advertised no-op — no rewrite, no version spent") {
@@ -907,31 +750,6 @@ class ManifestTableSpec extends SparkSpec {
     assert(t4.snapshot().count() === 6L)
   }
 
-  test("breakOrphanLock: orphan blocks -> break -> next commit succeeds; refuses on a published version") {
-    // VERDICT r18 item 3: the fenced admin unblock for the Hadoop store's
-    // documented orphan-lock mode
-    val root = freshRoot()
-    val t = ManifestTable(spark, root)
-    t.overwrite(kv(1L -> 1.0))
-    val lock = new java.io.File(s"$root/_log/v${"%020d".format(1)}.lock")
-    assert(lock.createNewFile())
-    intercept[java.io.IOException] { t.append(kv(2L -> 2.0), maxRetries = 1) }
-    // fencing: v0 is PUBLISHED — its (retained) reservation is not an
-    // orphan, and breaking it could let a racer overwrite a committed body
-    val e = intercept[IllegalStateException] { t.breakOrphanLock(0L) }
-    assert(e.getMessage.contains("published"), e.getMessage)
-    // the real orphan breaks; the SAME log position then commits cleanly
-    t.breakOrphanLock(1L)
-    assert(!lock.exists(), "the orphan lock must be gone")
-    assert(t.append(kv(2L -> 2.0)) == 1L)
-    assert(t.snapshot().count() === 2L)
-    t.breakOrphanLock(5L) // absent lock: idempotent no-op
-    // the conditional-PUT store has no lock objects to break
-    val (os, _, _) = objectStoreTable()
-    os.overwrite(kv(1L -> 1.0))
-    intercept[UnsupportedOperationException] { os.breakOrphanLock(1L) }
-  }
-
   test("latestVersion probe economy pinned: catch-up <= foreign-commits + 1 HEADs (plain and bursty store)") {
     // VERDICT r18 item 7: the forward-probe claim under instrumentation —
     // guards refactors from silently restoring the O(commits) LIST. HEADs
@@ -992,6 +810,62 @@ class ManifestTableSpec extends SparkSpec {
     val e = intercept[java.io.IOException] { t.append(kv(2L -> 2.0), maxRetries = 1) }
     assert(e.getMessage.contains("conditional-PUT"), e.getMessage)
     assert(e.getMessage.contains("unresolved"), e.getMessage)
-    assert(!e.getMessage.contains(".lock"), "object-store mode has no lock to name")
+    assert(!e.getMessage.contains(".lock"), "the conditional-PUT log has no lock to name")
+  }
+
+  private def manifestName(v: Long) = f"v$v%020d.txt"
+
+  test("table roots in absolute, file:// and relative form: a cold handle lists the same log") {
+    // the log's keys are built from the table root and listed back by the
+    // filesystem client; every root form must round-trip, or a cold
+    // handle with no _ckpt hint reads an existing table as empty
+    val base = Files.createTempDirectory("graft-mt-roots")
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val relDir = Files.createTempDirectory(cwd.resolve("target"), "graft-mt-rel")
+    try {
+      val roots = Seq(
+        "absolute" -> (base.resolve("abs").toString, base.resolve("abs")),
+        "file://" -> (base.resolve("sch").toUri.toString, base.resolve("sch")),
+        "relative" -> (cwd.relativize(relDir.resolve("t1")).toString, relDir.resolve("t1")))
+      for ((form, (root, onDisk)) <- roots) {
+        val t = ManifestTable(spark, root)
+        t.overwrite(kv(1L -> 1.0))
+        t.append(kv(2L -> 2.0))
+        val cold = ManifestTable(spark, root, checkpointInterval = 0)
+        assert(cold.latestVersion().contains(1L), s"$form root $root: cold latest")
+        assert(cold.versions() == Seq(0L, 1L), s"$form root $root")
+        assert(cold.snapshot().orderBy("k").as[(Long, Double)].collect().toList ==
+          t.snapshot().orderBy("k").as[(Long, Double)].collect().toList, s"$form root $root")
+        assert(Files.exists(onDisk.resolve("_log").resolve(manifestName(1))),
+          s"$form root $root: the manifest must land at <root>/_log")
+      }
+    } finally {
+      val rel = new org.apache.hadoop.fs.Path(relDir.toString)
+      rel.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rel, true)
+    }
+  }
+
+  test("a table written by the lock-file protocol opens unchanged: its leftovers are ignored") {
+    // earlier builds committed through vN.lock + .tmp-<uuid> + rename on a
+    // checksummed filesystem; those files may still sit in an old _log
+    val root = freshRoot()
+    val t = ManifestTable(spark, root)
+    t.overwrite(kv(1L -> 1.0))
+    t.append(kv(2L -> 2.0))
+    val log = java.nio.file.Paths.get(root, "_log")
+    for (v <- 0 to 2) Files.createFile(log.resolve(f"v$v%020d.lock"))
+    Files.write(log.resolve(s".tmp-${java.util.UUID.randomUUID()}"), "torn".getBytes("UTF-8"))
+    for (v <- 0 to 1) Files.write(log.resolve(s".${manifestName(v)}.crc"), Array[Byte](1, 2))
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(new graft.ops.ObjectStoreLogStore(new graft.ops.HadoopFsObjectStore(root, conf), root)
+      .listVersions() == Seq(0L, 1L))
+    val cold = ManifestTable(spark, root, checkpointInterval = 0)
+    assert(cold.latestVersion().contains(1L))
+    assert(cold.versions() == Seq(0L, 1L))
+    // the planted v2 lock is no reservation: the next append lands at v2
+    assert(cold.append(kv(3L -> 3.0)) == 2L)
+    assert(cold.snapshot().count() == 3L)
+    val fresh = ManifestTable(spark, root, checkpointInterval = 0)
+    assert(fresh.latestVersion().contains(2L) && fresh.snapshot().count() == 3L)
   }
 }

@@ -236,8 +236,9 @@ object HadoopFsRenameBranchContract {
 /** VERDICT r17 item 6 (half 2) — fault injection for the rename branch's
   * ambiguity probe, which no real local rename can reach (POSIX rename
   * either applies or throws truthfully): the `renameNoOverwrite` seam is
-  * wrapped to simulate the three HDFS-RPC lost-response outcomes the probe
-  * in `putIfNoneMatch` adjudicates.
+  * wrapped to simulate the HDFS-RPC lost-response outcomes the probe in
+  * `putIfNoneMatch` adjudicates, a probe that fails too, and a rename that
+  * fails for a reason other than a lost race.
   */
 class HadoopFsRenamePublishFaultSpec extends org.scalatest.funsuite.AnyFunSuite {
   import org.apache.hadoop.fs.Path
@@ -247,16 +248,31 @@ class HadoopFsRenamePublishFaultSpec extends org.scalatest.funsuite.AnyFunSuite 
     */
   private final class Harness {
     var mode: String = "real"
+    /** When set, the next `get` (the ambiguity probe) throws once. */
+    @volatile var probeFails = false
     val root: String = java.nio.file.Files.createTempDirectory("graft-fsos-fault").toString
     val store: graft.ops.HadoopFsObjectStore = new graft.ops.HadoopFsObjectStore(
         root, new org.apache.hadoop.conf.Configuration()) {
       override protected def publishViaHardLink: Boolean = false
+      override def get(key: String): Option[Array[Byte]] = {
+        if (probeFails) {
+          probeFails = false
+          throw new java.io.IOException("injected: probe hit the same blip")
+        }
+        super.get(key)
+      }
       override protected def renameNoOverwrite(tmp: Path, dest: Path): Unit = mode match {
         case "real" => super.renameNoOverwrite(tmp, dest)
         case "apply-then-throw" =>
           // the RPC landed server-side; the client saw a connection error
           super.renameNoOverwrite(tmp, dest)
           throw new java.io.IOException("injected: response lost after apply")
+        case "apply-then-probe-throws" =>
+          super.renameNoOverwrite(tmp, dest)
+          probeFails = true
+          throw new java.io.IOException("injected: response lost after apply")
+        case "denied" =>
+          throw new java.io.IOException("Permission denied: injected on the rename")
         case "foreign-then-throw" =>
           // a racing writer's body landed; our own rename never applied
           java.nio.file.Files.write(
@@ -306,6 +322,35 @@ class HadoopFsRenamePublishFaultSpec extends org.scalatest.funsuite.AnyFunSuite 
     h.mode = "real"
     assert(h.store.putIfNoneMatch("t/_log/v0.json", body))
     assert(h.store.get("t/_log/v0.json").exists(java.util.Arrays.equals(_, body)))
+  }
+
+  test("rename applied, then the probe throws: the publish throws, the body stays, the version is taken") {
+    // unverifiable outcome: the PUT must fail loudly, never report a
+    // loss (the caller would delete a dir the committed manifest names)
+    val h = new Harness
+    h.mode = "apply-then-probe-throws"
+    val body = "v0 manifest".getBytes("UTF-8")
+    intercept[java.io.IOException] { h.store.putIfNoneMatch("t/_log/v0.json", body) }
+    h.mode = "real"
+    assert(h.store.get("t/_log/v0.json").exists(java.util.Arrays.equals(_, body)),
+      "the rename had applied: the committed body must be untouched")
+    assert(!h.store.putIfNoneMatch("t/_log/v0.json", "usurper".getBytes("UTF-8")),
+      "a second PUT of the committed version must lose")
+    assert(h.store.get("t/_log/v0.json").exists(java.util.Arrays.equals(_, body)))
+  }
+
+  test("rename fails with Permission denied: the log store's final exception chain names it") {
+    val h = new Harness
+    h.mode = "denied"
+    val log = new ObjectStoreLogStore(h.store, "t")
+    val e = intercept[ObjectStoreClient.TransientStoreException] {
+      log.publishIfAbsent(0L, "v0 manifest".getBytes("UTF-8"))
+    }
+    assert(e.getMessage.contains("unresolved"), e.getMessage)
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+    assert(chain.exists(c => c.getMessage != null && c.getMessage.contains("Permission denied")),
+      s"the cause must survive the resolution loop: ${chain.map(_.getMessage)}")
+    assert(log.listVersions().isEmpty, "nothing may be published")
   }
 }
 

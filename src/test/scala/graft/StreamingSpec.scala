@@ -537,6 +537,33 @@ class StreamingSpec extends SparkSpec {
       s"handlers must skip the empty trigger only, got $accepted")
   }
 
+  test("nearDupFilterSink: a stale fingerprint store (sig array<string>) fails the first trigger before any commit") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-neardup-stale")
+    val ckpt = Files.createTempDirectory("graft-neardup-stale-ckpt")
+    val root = dir.toString + "/sigs"
+    val table = graft.ops.ManifestTable(spark, root)
+    // the store layout of builds whose signatures were hex strings
+    table.overwrite(Seq((1L, 0, "b0", Seq("0a1b", "2c3d"))).toDF("doc_id", "band", "bucket", "sig"))
+    val accepted = new java.util.concurrent.atomic.AtomicInteger()
+    val input = MemoryStream[(Long, String)]
+    val q = Streaming.nearDupFilterSink(
+        input.toDF().toDF("doc_id", "text"), "doc_id", "text", table,
+        onAccepted = _ => accepted.incrementAndGet())
+      .option("checkpointLocation", ckpt.toString).start()
+    input.addData((2L, "the quick brown fox jumps over a lazy dog"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msg.contains(root) && msg.contains("rebuild the store"), msg)
+    assert(msg.contains("array<string>") && msg.contains("array<int>"), msg)
+    assert(table.versions() == Seq(0L), "a rejected trigger must commit nothing")
+    assert(accepted.get() == 0, "onAccepted must never run on a rejected trigger")
+  }
+
   test("streaming ANN serve: stream-served top-k equals the batch probe; redelivered queries append nothing") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft-ann-serve")
